@@ -244,20 +244,27 @@ def test_ttl_stream_head_break_with_multiple_chains_in_one_batch(spark, tmp_path
 
 
 def test_fingerprints_immune_to_warm_process_cache_state():
-    """r09 regression: catalog._NANOS_PROBE_CACHE (a per-session memo) sits
-    inside every query's static call closure via load(); computing
-    fingerprints IN-PROCESS after queries have run hashed the mutated cache
-    and spuriously drifted 288 queries. changed_queries must compute in a
-    fresh interpreter, so poking the cache here must not change its answer."""
+    """r09 regression: catalog._NANOS_PROBE_CACHE and catalog._SCHEMA_CACHE
+    (per-session memos) sit inside every query's static call closure via
+    load(); computing fingerprints IN-PROCESS after queries have run hashed
+    the mutated cache and spuriously drifted 288 queries. changed_queries
+    must compute in a fresh interpreter, so poking the caches here must not
+    change its answer."""
+    from pyspark.sql.types import StructType
+
     from tools.fingerprints import changed_queries
     from tools.regen_coverage import _all_checked
     from uk_procurement_data_pipeline_spark import catalog
 
     green = _all_checked()
     before = changed_queries(green)
-    catalog._NANOS_PROBE_CACHE[("test-app", "/tmp/poked.parquet")] = True
+    probe_key = ("test-app", "/tmp/poked.parquet")
+    schema_key = ("test-app", "/tmp/poked.parquet", 0, 0)
+    catalog._NANOS_PROBE_CACHE[probe_key] = True
+    catalog._SCHEMA_CACHE[schema_key] = StructType([])
     try:
         after = changed_queries(green)
     finally:
-        catalog._NANOS_PROBE_CACHE.pop(("test-app", "/tmp/poked.parquet"))
+        catalog._NANOS_PROBE_CACHE.pop(probe_key)
+        catalog._SCHEMA_CACHE.pop(schema_key)
     assert before == after

@@ -476,3 +476,39 @@ def test_replay_scramble_order_is_md5_permutation(spark, sf_dir):
     r2 = EventsReplayStreamReader({"path": path})
     got2, _ = r2.read({"pos": 0})
     assert [row[0] for row in list(got2)[:50]] == keys[:50]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_session_ttl_close",
+        "stream_interval_join_live",
+        "stream_late_drop_windows",
+    ],
+)
+def test_stream_start_failure_leaks_no_conf(
+    spark, sf_dir, tmp_path, monkeypatch, name
+):
+    """A spec whose writeStream .start() raises must still restore every
+    conf it scoped around the start (shuffle width, state-store provider)."""
+    import tempfile
+
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from uk_procurement_data_pipeline_spark.queries import registry
+
+    def fail(self, *args, **kwargs):
+        raise RuntimeError("start failed")
+
+    mkdtemp = tempfile.mkdtemp
+    # the checkpoint dir a failed start leaves behind lands in tmp_path
+    monkeypatch.setattr(
+        tempfile,
+        "mkdtemp",
+        lambda prefix=None, dir=None: mkdtemp(prefix=prefix, dir=tmp_path),
+    )
+    monkeypatch.setattr(DataStreamWriter, "start", fail)
+    before = spark.conf.getAll
+    with pytest.raises(RuntimeError, match="start failed"):
+        registry()[name].fn(spark, sf_dir)
+    assert spark.conf.getAll == before

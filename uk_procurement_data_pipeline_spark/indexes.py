@@ -54,6 +54,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from uk_procurement_data_pipeline_spark.catalog import read_parquet
+
 _LOCK = threading.Lock()
 _ROOT: str | None = None
 
@@ -122,7 +124,7 @@ def build_or_load(
     key = generation_key(name, fp)
     final = Path(catalog_root()) / key
     if (final / "_SUCCESS").exists():
-        return spark.read.parquet(str(final))
+        return read_parquet(spark, str(final))
     tmp = Path(catalog_root()) / f"{key}.tmp.{os.getpid()}"
     with _LOCK:
         BUILD_COUNTS[key] = BUILD_COUNTS.get(key, 0) + 1
@@ -135,7 +137,7 @@ def build_or_load(
         shutil.rmtree(tmp, ignore_errors=True)
         if not (final / "_SUCCESS").exists():
             raise
-    return spark.read.parquet(str(final))
+    return read_parquet(spark, str(final))
 
 
 def vacuum_stale(name: str, keep_fps: set[str]) -> list[str]:

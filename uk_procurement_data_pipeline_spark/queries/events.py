@@ -66,21 +66,31 @@ from contextlib import contextmanager  # noqa: E402
 
 
 @contextmanager
-def _stream_shuffle(spark, n: str = "8"):
-    """Scope the state-store shuffle width around a writeStream .start().
+def _stream_shuffle(spark, n: str = "8", provider: str | None = None):
+    """Scope the state-store shuffle width, and the state-store provider
+    class when ``provider`` is given, around a writeStream .start().
 
     The streaming specs run 1-12 micro-batches of a few thousand rows:
     the session's 32 shuffle partitions are ~all task-launch overhead per
     batch, while 8 still exercises multi-partition state sharding. Only
-    query START reads the conf (the plan is fixed then), so restoring it
-    immediately after .start() cannot affect the running stream.
+    query START reads these confs (the plan is fixed then), so restoring
+    them immediately after .start() cannot affect the running stream. The
+    restore runs even when .start() raises, so a failed spec leaks no conf.
     """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
+    confs = {"spark.sql.shuffle.partitions": n}
+    if provider is not None:
+        confs["spark.sql.streaming.stateStore.providerClass"] = provider
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 @register(
@@ -1614,10 +1624,7 @@ def stream_session_ttl_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     import re
     import time
 
-    # Small micro-batches (2-12 per run): 32 state-store shuffle
-    # partitions would be ~all task-launch overhead per batch.
-    # 8 partitions still exercises multi-partition state sharding. The
-    # checkpoint (offset/commit log + state snapshots, fsynced EVERY
+    # The checkpoint (offset/commit log + state snapshots, fsynced EVERY
     # batch) goes to tmpfs when available — per-batch latency is commit
     # IO, not compute, at these batch sizes; a fresh dir each run keeps
     # the replay deterministic (a stale checkpoint would resume offsets
@@ -1628,17 +1635,15 @@ def stream_session_ttl_close(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
     ckpt = tempfile.mkdtemp(prefix=f"ttl_ckpt_{qname}_", dir=ckpt_root)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = (
-        closed.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    with _stream_shuffle(spark):
+        q = (
+            closed.writeStream.format("memory")
+            .queryName(qname)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
     # Deterministic drain target: the trailing no-data batch — scheduled
     # after the final data batch advances the watermark — must COMMIT
     # before stop(), so its timer-closed sessions are always in the sink
@@ -1793,8 +1798,6 @@ def stream_interval_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
     ckpt = tempfile.mkdtemp(prefix=f"ssj_ckpt_{qname}_", dir=ckpt_root)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     # r13 (guide §1/VERDICT r12 item 4): RocksDB state store for THIS query
     # only. Interleaved best-of-3 A/B over the 4 streaming queries:
     # RocksDB was a wash on the single-store queries (session_ttl +0.03,
@@ -1804,31 +1807,19 @@ def stream_interval_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     # commit path beats HDFSBackedStateStore's JVM map snapshot+fsync
     # exactly where store count x state size is highest. Conf is read at
     # .start(), scoped like the shuffle width, env-overridable.
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
+    provider = os.environ.get(
+        "SPARK_GRAFT_SSJ_STATESTORE",
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
     )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        os.environ.get(
-            "SPARK_GRAFT_SSJ_STATESTORE",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        ),
-    )
-    q = (
-        pairs.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    if prev_provider is None:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    else:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", prev_provider
+    with _stream_shuffle(spark, provider=provider):
+        q = (
+            pairs.writeStream.format("memory")
+            .queryName(qname)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="0 seconds")
+            .start()
         )
     try:
         deadline = time.time() + 240
@@ -5569,17 +5560,15 @@ def stream_late_drop_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
     ckpt = tempfile.mkdtemp(prefix=f"ld_ckpt_{qname}_", dir=ckpt_root)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    with _stream_shuffle(spark):
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(qname)
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="0 seconds")
+            .start()
+        )
     ts_col = pq.read_table(
         f"{sf_dir}/events.parquet", columns=["ts"], memory_map=True
     )["ts"]
