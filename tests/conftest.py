@@ -22,6 +22,15 @@ SF01_DIR = str(Path(SF_DIR).parent / "sf0.1")
 FIXTURES = Path(__file__).parent / "fixtures"
 
 
+def last_job_id(spark) -> int:
+    """Id of the newest job the status store has recorded (-1 if none);
+    compare it around a call to count the Spark jobs the call ran."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("engine-tests", master="local[4]", shuffle_partitions=4)

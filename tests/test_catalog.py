@@ -12,23 +12,16 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from tests.conftest import last_job_id
 from uk_procurement_data_pipeline_spark import catalog
-
-
-def _last_job_id(spark) -> int:
-    """Id of the newest job the status store has recorded (-1 if none)."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    jobs = sc.statusStore().jobsList(None)  # newest first
-    return jobs.head().jobId() if jobs.nonEmpty() else -1
 
 
 @pytest.mark.parametrize("table", catalog.TABLES)
 def test_second_load_runs_no_spark_job(spark, sf_dir, table):
     catalog.load(spark, sf_dir, table)
-    before = _last_job_id(spark)
+    before = last_job_id(spark)
     catalog.load(spark, sf_dir, table)
-    assert _last_job_id(spark) == before
+    assert last_job_id(spark) == before
 
 
 @pytest.mark.parametrize("table", catalog.TABLES)

@@ -7,8 +7,10 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import last_job_id
 from uk_procurement_data_pipeline_spark.queries import registry
 
 
@@ -122,6 +124,36 @@ def test_supplier_pagerank_covers_all_suppliers_and_no_cartesian(spark, sf_dir):
     assert len(out) == n_supp
     # damping floor: every node keeps at least the teleport mass
     assert all(r["mass"] > 0.15 for r in out)
+
+
+def _optimized_nodes(df) -> list[str]:
+    """Node names of the optimized logical plan, walked through the JVM."""
+    names, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+@pytest.mark.parametrize(
+    "name, joins", [("supplier_pagerank", 1), ("hits_hubs_authorities", 0)]
+)
+def test_bipartite_iterations_are_lazy_window_passes(spark, sf_dir, name, joins):
+    """Both graph iterations are window passes over one pair set: building
+    the query runs no Spark job (no eager checkpoint) once the schema memo
+    is warm, and the only join left is the one that makes the pairs."""
+    spec = registry()[name]
+    assert not spec.eager
+    spec.fn(spark, sf_dir)  # warm-up: fills the per-session schema memo
+    before = last_job_id(spark)
+    df = spec.fn(spark, sf_dir)
+    assert last_job_id(spark) == before
+    nodes = _optimized_nodes(df)
+    assert nodes.count("Join") == joins
+    assert "Window" in nodes
+    assert "CartesianProduct" not in plan_of(spark, sf_dir, name)
 
 
 def test_kmeans_assignment_is_map_side(spark, sf_dir):

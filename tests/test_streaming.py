@@ -484,13 +484,15 @@ def test_replay_scramble_order_is_md5_permutation(spark, sf_dir):
         "stream_session_ttl_close",
         "stream_interval_join_live",
         "stream_late_drop_windows",
+        "python_datasource_stream_feed",
     ],
 )
 def test_stream_start_failure_leaks_no_conf(
     spark, sf_dir, tmp_path, monkeypatch, name
 ):
     """A spec whose writeStream .start() raises must still restore every
-    conf it scoped around the start (shuffle width, state-store provider)."""
+    conf it scoped around the start (shuffle width, checkpoint manager)
+    and remove the checkpoint dir it made."""
     import tempfile
 
     from pyspark.sql.streaming.readwriter import DataStreamWriter
@@ -512,3 +514,36 @@ def test_stream_start_failure_leaks_no_conf(
     with pytest.raises(RuntimeError, match="start failed"):
         registry()[name].fn(spark, sf_dir)
     assert spark.conf.getAll == before
+    assert list(tmp_path.iterdir()) == []
+
+
+_CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+@pytest.mark.parametrize(
+    "prev",
+    [
+        None,
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+    ],
+    ids=["unset", "set"],
+)
+def test_stream_shuffle_scopes_checkpoint_file_manager(spark, prev):
+    """Inside the stream scope checkpoints use the FileSystem-based manager
+    (no forked readlink per rename); afterwards the previous value is back,
+    or the key is unset again if it had none."""
+    from uk_procurement_data_pipeline_spark.queries.events import _stream_shuffle
+
+    if prev is None:
+        spark.conf.unset(_CKPT_MANAGER)
+    else:
+        spark.conf.set(_CKPT_MANAGER, prev)
+    try:
+        with _stream_shuffle(spark):
+            assert spark.conf.get(_CKPT_MANAGER).endswith(
+                ".FileSystemBasedCheckpointFileManager"
+            )
+        assert spark.conf.get(_CKPT_MANAGER, None) == prev
+    finally:
+        spark.conf.unset(_CKPT_MANAGER)

@@ -29,7 +29,7 @@ disagree per term.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, WindowSpec
 from pyspark.sql import functions as F
 
 # Internal decimal scale. Two empirically-calibrated constraints:
@@ -57,6 +57,16 @@ def dec(col: Column | str) -> Column:
 def exact_sum(col: Column | str, alias: str | None = None) -> Column:
     """Order-independent SUM over a double column, returned as double."""
     out = F.round(F.sum(dec(col)), _OUT_SCALE).cast("double")
+    return out.alias(alias) if alias else out
+
+
+def exact_sum_over(
+    col: Column | str, window: WindowSpec, alias: str | None = None
+) -> Column:
+    """:func:`exact_sum` as a window aggregate: the same decimal terms and
+    final rounding, evaluated over ``window`` (mirrored by :func:`oracle_sum`
+    on the grouped side, since the sum of a whole partition is the group's)."""
+    out = F.round(F.sum(dec(col)).over(window), _OUT_SCALE).cast("double")
     return out.alias(alias) if alias else out
 
 

@@ -2083,30 +2083,32 @@ def python_datasource_stream_feed(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count(F.lit(1)).cast("bigint").alias("n_notices"),
         F.sum("amount_cents").cast("bigint").alias("total_cents"),
     )
-    # 8 state partitions (not the session's 32 — two 1000-row pages would
-    # pay ~all task-launch overhead) and a tmpfs checkpoint, as in the
-    # other streaming specs (r10).
+    # The events.py stream context scopes 8 state partitions (not the
+    # session's 32 — two 1000-row pages would pay ~all task-launch
+    # overhead) and the fork-free checkpoint file manager, restoring both
+    # in a finally. The checkpoint's per-file cost was a forked readlink
+    # per rename, not IO; tmpfs just keeps the throwaway dir off disk. The
+    # dir is removed even when .start() raises.
     import os
     import shutil
     import tempfile
 
-    ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    ckpt = tempfile.mkdtemp(prefix=f"pyds_ckpt_{qname}_", dir=ckpt_root)
-    # ADVICE r10: the inline set/restore here was not exception-safe — if
-    # .start() raised, the session kept shuffle.partitions=8. Reuse the
-    # events.py context manager, which restores in a finally.
     from uk_procurement_data_pipeline_spark.queries.events import _stream_shuffle
 
-    with _stream_shuffle(spark, "8"):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
+    ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
+    ckpt = tempfile.mkdtemp(prefix=f"pyds_ckpt_{qname}_", dir=ckpt_root)
+
+    q = None
     try:
+        with _stream_shuffle(spark, "8"):
+            q = (
+                agg.writeStream.format("memory")
+                .queryName(qname)
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(processingTime="0 seconds")
+                .start()
+            )
         # Drain poll on lastProgress offsets (r10; was a collect() of the
         # memory table every 0.25 s — each poll a full Spark job). A
         # progress row is published only AFTER its batch commits, so
@@ -2137,7 +2139,8 @@ def python_datasource_stream_feed(spark: SparkSession, sf_dir: str) -> DataFrame
                 f"notice_feed stream did not drain {n} rows in 240s"
             )
     finally:
-        q.stop()
+        if q is not None:
+            q.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(qname).orderBy("region")
 

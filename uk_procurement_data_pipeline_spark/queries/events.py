@@ -64,22 +64,41 @@ def _progress_wm_ms(lp) -> int:
 
 from contextlib import contextmanager  # noqa: E402
 
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 @contextmanager
-def _stream_shuffle(spark, n: str = "8", provider: str | None = None):
-    """Scope the state-store shuffle width, and the state-store provider
-    class when ``provider`` is given, around a writeStream .start().
+def _stream_shuffle(spark, n: str = "8"):
+    """Scope the stream confs around a writeStream .start(): the state-store
+    shuffle width and the checkpoint file manager.
 
     The streaming specs run 1-12 micro-batches of a few thousand rows:
     the session's 32 shuffle partitions are ~all task-launch overhead per
-    batch, while 8 still exercises multi-partition state sharding. Only
-    query START reads these confs (the plan is fixed then), so restoring
-    them immediately after .start() cannot affect the running stream. The
-    restore runs even when .start() raises, so a failed spec leaks no conf.
+    batch, while 8 still exercises multi-partition state sharding.
+
+    Checkpoint files go through the FileSystem-based manager. The default
+    FileContext-based one renames through ChecksumFs, which asks the raw
+    local filesystem for the link status of every file; without the native
+    Hadoop library that forks a ``readlink`` process per call (176 of the
+    236 processes a stream_dedup_pairs run at sf0.1 forked; none with this
+    manager). Every spec checkpoints to a local temp dir, where rename(2)
+    is atomic, so nothing is lost; this is not a session default because
+    an HDFS or object-store checkpoint needs FileContext's atomic
+    no-overwrite rename.
+
+    A stream copies the session confs at START (the plan and its checkpoint
+    manager are fixed then, and every batch's state commit uses them), so
+    restoring them immediately after .start() cannot affect the running
+    stream. The restore runs even when .start() raises, so a failed spec
+    leaks no conf.
     """
-    confs = {"spark.sql.shuffle.partitions": n}
-    if provider is not None:
-        confs["spark.sql.streaming.stateStore.providerClass"] = provider
+    confs = {
+        "spark.sql.shuffle.partitions": n,
+        "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_FILE_MANAGER,
+    }
     prev = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():
         spark.conf.set(k, v)
@@ -1624,26 +1643,6 @@ def stream_session_ttl_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     import re
     import time
 
-    # The checkpoint (offset/commit log + state snapshots, fsynced EVERY
-    # batch) goes to tmpfs when available — per-batch latency is commit
-    # IO, not compute, at these batch sizes; a fresh dir each run keeps
-    # the replay deterministic (a stale checkpoint would resume offsets
-    # and skip data).
-    import os
-    import shutil
-    import tempfile
-
-    ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    ckpt = tempfile.mkdtemp(prefix=f"ttl_ckpt_{qname}_", dir=ckpt_root)
-    with _stream_shuffle(spark):
-        q = (
-            closed.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
     # Deterministic drain target: the trailing no-data batch — scheduled
     # after the final data batch advances the watermark — must COMMIT
     # before stop(), so its timer-closed sessions are always in the sink
@@ -1661,7 +1660,28 @@ def stream_session_ttl_close(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _wm_ms = _progress_wm_ms  # shared exact-ms helper (module top)
 
+    # The checkpoint (offset/commit log + state snapshots, written EVERY
+    # batch; _stream_shuffle picks the fork-free file manager for it) goes
+    # to tmpfs when available; a fresh dir each run keeps the replay
+    # deterministic (a stale checkpoint would resume offsets and skip
+    # data). It is removed even when .start() raises.
+    import os
+    import shutil
+    import tempfile
+
+    ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
+    ckpt = tempfile.mkdtemp(prefix=f"ttl_ckpt_{qname}_", dir=ckpt_root)
+    q = None
     try:
+        with _stream_shuffle(spark):
+            q = (
+                closed.writeStream.format("memory")
+                .queryName(qname)
+                .outputMode("update")
+                .option("checkpointLocation", ckpt)
+                .trigger(processingTime="0 seconds")
+                .start()
+            )
         deadline = time.time() + 240
         drained = False
         while time.time() < deadline:
@@ -1683,7 +1703,8 @@ def stream_session_ttl_close(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"commit the final-watermark no-data batch in 240s"
             )
     finally:
-        q.stop()
+        if q is not None:
+            q.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(qname).select(
         "user_id", "start_micro", "end_micro", "n_events"
@@ -1798,30 +1819,17 @@ def stream_interval_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
     ckpt = tempfile.mkdtemp(prefix=f"ssj_ckpt_{qname}_", dir=ckpt_root)
-    # r13 (guide §1/VERDICT r12 item 4): RocksDB state store for THIS query
-    # only. Interleaved best-of-3 A/B over the 4 streaming queries:
-    # RocksDB was a wash on the single-store queries (session_ttl +0.03,
-    # late_drop +0.11, datasource_feed -0.03) but -0.82 s (6.88 -> 6.06)
-    # on this two-leg stream-stream join, which keeps four state stores
-    # (two per join side) per partition per batch — RocksDB's native
-    # commit path beats HDFSBackedStateStore's JVM map snapshot+fsync
-    # exactly where store count x state size is highest. Conf is read at
-    # .start(), scoped like the shuffle width, env-overridable.
-    provider = os.environ.get(
-        "SPARK_GRAFT_SSJ_STATESTORE",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    with _stream_shuffle(spark, provider=provider):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
+    q = None
     try:
+        with _stream_shuffle(spark):
+            q = (
+                pairs.writeStream.format("memory")
+                .queryName(qname)
+                .outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .trigger(processingTime="0 seconds")
+                .start()
+            )
         deadline = time.time() + 240
         while time.time() < deadline:
             lp = q.lastProgress
@@ -1840,7 +1848,8 @@ def stream_interval_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"stream-stream join did not drain {n_rows} rows in 240s"
             )
     finally:
-        q.stop()
+        if q is not None:
+            q.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(qname).select("click_id", "view_id", "user_id", "lag_us")
 
@@ -5558,17 +5567,6 @@ def stream_late_drop_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("w_start"), "n_events")
     )
-    ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    ckpt = tempfile.mkdtemp(prefix=f"ld_ckpt_{qname}_", dir=ckpt_root)
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
     ts_col = pq.read_table(
         f"{sf_dir}/events.parquet", columns=["ts"], memory_map=True
     )["ts"]
@@ -5577,7 +5575,19 @@ def stream_late_drop_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _wm_ms = _progress_wm_ms  # shared exact-ms helper (module top)
 
+    ckpt_root = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
+    ckpt = tempfile.mkdtemp(prefix=f"ld_ckpt_{qname}_", dir=ckpt_root)
+    q = None
     try:
+        with _stream_shuffle(spark):
+            q = (
+                agg.writeStream.format("memory")
+                .queryName(qname)
+                .outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .trigger(processingTime="0 seconds")
+                .start()
+            )
         deadline = time.time() + 240
         drained = False
         while time.time() < deadline:
@@ -5597,7 +5607,8 @@ def stream_late_drop_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"commit the final-watermark flush batch in 240s"
             )
     finally:
-        q.stop()
+        if q is not None:
+            q.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(qname).select(
         F.unix_micros(F.col("w_start").cast("timestamp")).alias("w_start_us"),

@@ -3,14 +3,18 @@ expressed as unrolled relational plans, the batch sibling of the
 label-propagation connected components in queries/dedup.py).
 
 ``supplier_pagerank`` runs two unrolled PageRank iterations over the
-buyer<->supplier transaction graph (orders ⋈ lineitem). Each iteration is
-the canonical relational PageRank step: join ranks to the edge list on
-source, send rank/out-degree along every edge, hash-aggregate by
-destination. Both shuffles are keyed on node ids — uniformly distributed,
-no driver-side state, no collect — so the same plan runs on a
-1000-executor cluster; deeper iteration just appends more of the same
-stages (or loops with per-round materialization like dedup.py's
-components, which documents the lineage-growth trade).
+buyer<->supplier transaction graph (orders ⋈ lineitem). The graph is
+bipartite, so a supplier's iteration-2 mass needs only the iteration-1
+mass of its customers, and each iteration is a window pass over the one
+distinct pair set: out-degrees are partition counts, and a node's
+incoming mass is an exact sum over its partition (customers) or group
+(suppliers). Every shuffle is keyed on a node id — uniformly distributed,
+no driver-side state, no collect, no materialized edge list — so the same
+lazy plan runs on a 1000-executor cluster. ``hits_hubs_authorities`` is
+the same shape in exact integers. Graphs that are not bipartite (or need
+deeper iteration) join ranks back to the edge list per round and
+materialize per round like dedup.py's components, which documents the
+lineage-growth trade.
 
 Cross-engine determinism: rank mass flows through the exact-decimal sum
 contract (functions/exact.py), so per-destination accumulation is
@@ -22,11 +26,15 @@ quantization of that contract retains full signal.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from uk_procurement_data_pipeline_spark.catalog import load
-from uk_procurement_data_pipeline_spark.functions.exact import exact_sum, oracle_sum
+from uk_procurement_data_pipeline_spark.functions.exact import (
+    exact_sum,
+    exact_sum_over,
+    oracle_sum,
+)
 from uk_procurement_data_pipeline_spark.queries.base import register
 
 _DAMP = 0.85
@@ -35,13 +43,13 @@ _DAMP = 0.85
 @register(
     name="supplier_pagerank",
     survey="J6 A7 F1 U1",
-    eager=True,  # fn materializes the edge table; time it honestly
     doc="Two unrolled PageRank iterations over the undirected buyer<->"
     "supplier graph (distinct customer-supplier pairs from orders ⋈ "
-    "lineitem, both directions). Join-on-source + exact-sum-by-"
-    "destination per iteration; returns the supplier nodes with final "
-    "mass. Exact decimal accumulation makes the iteration "
-    "deterministic across engines.",
+    "lineitem, both directions). The graph is bipartite, so both "
+    "iterations are window passes over the one pair set (degrees and "
+    "customer mass by partition, supplier mass by exact-sum group); "
+    "returns the supplier nodes with final mass. Exact decimal "
+    "accumulation makes the iteration deterministic across engines.",
     oracle=f"""
         WITH pairs AS (
           SELECT DISTINCT 'c' || o_custkey AS cnode, 's' || l_suppkey AS snode
@@ -73,62 +81,34 @@ _DAMP = 0.85
 def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    # The expensive prefix (orders ⋈ lineitem + distinct) is materialized
-    # once; every downstream consumer — degree count, both iterations —
-    # reads the small distinct pair set (same lineage-reuse lesson as
-    # dedup.py's shingle table; without this each iteration re-runs the
-    # whole prefix, and each added iteration re-runs it again).
-    # r12 batch 2 (guide §2.3 narrower types): node ids stay BIGINT all the
-    # way through the iteration — customer k maps to 2k, supplier k to
-    # 2k+1 — instead of the 'c'/'s'-prefixed strings the output schema
-    # wants. Every exchange (the pair distinct, the degree/iteration
-    # shuffles) moves and hashes 8-byte longs instead of short strings;
-    # the output strings are built once from the 1k-row result. Same
-    # distinct pair set, same groupings, same exact-decimal sums.
     pairs = (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("cnode"),
-            (F.col("l_suppkey") * 2 + 1).alias("snode"),
-        )
+        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    # Both directions in ONE pass over pairs (inline-explode, no self-union
-    # double scan).
-    edges = pairs.selectExpr(
-        "inline(array(struct(cnode AS src, snode AS dst),"
-        " struct(snode AS src, cnode AS dst)))"
+    # The graph is bipartite, so a node's out-degree is its count of
+    # distinct pairs and the two iterations are window passes over the one
+    # pair set: iteration 1 gives customer c the mass its suppliers send
+    # (1/deg_s each), iteration 2 gives supplier s the mass its customers
+    # send (mass_c/deg_c each). No join-back, no materialized edge list.
+    by_s, by_c = Window.partitionBy("s"), Window.partitionBy("c")
+    one = F.lit(1)
+    mass_c = pairs.withColumn("deg_s", F.count(one).over(by_s)).select(
+        "s",
+        F.count(one).over(by_c).alias("deg_c"),
+        (
+            F.lit(0.15)
+            + F.lit(_DAMP)
+            * exact_sum_over(F.lit(1.0) / F.col("deg_s").cast("double"), by_c)
+        ).alias("mass_c"),
     )
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # edges is shuffled on src for BOTH the degree count and the join below;
-    # AQE reuses that exchange, so the double consume costs one shuffle.
-    ed = edges.join(outdeg, "src")
-
-    # Iteration 1 from uniform mass 1.0: contribution is 1/deg.
-    r1 = (
-        ed.groupBy("dst")
-        .agg(exact_sum(F.lit(1.0) / F.col("deg").cast("double"), "s"))
+    return (
+        mass_c.groupBy("s")
+        .agg(exact_sum(F.col("mass_c") / F.col("deg_c").cast("double"), "t"))
         .select(
-            F.col("dst").alias("node"),
-            (F.lit(0.15) + F.lit(_DAMP) * F.col("s")).alias("mass"),
+            F.concat(F.lit("s"), F.col("s")).alias("node"),
+            (F.lit(0.15) + F.lit(_DAMP) * F.col("t")).alias("mass"),
         )
-    )
-    # Iteration 2: contribution is mass1/deg.
-    r2 = (
-        ed.join(r1, ed.src == r1.node)
-        .groupBy("dst")
-        .agg(exact_sum(F.col("mass") / F.col("deg").cast("double"), "s"))
-        .select(
-            F.col("dst").alias("node"),
-            (F.lit(0.15) + F.lit(_DAMP) * F.col("s")).alias("mass"),
-        )
-    )
-    return r2.where(F.col("node") % 2 == 1).select(
-        F.concat(F.lit("s"), ((F.col("node") - 1) / 2).cast("bigint")).alias(
-            "node"
-        ),
-        "mass",
     )
 
 
@@ -293,8 +273,8 @@ def kcore_peel_unrolled(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = e.selectExpr("a AS n", "b AS m").unionAll(
         e.selectExpr("b AS n", "a AS m")
     )
-    # The sampled edge list is reused by FOUR degree rounds below:
-    # materialize once (same localCheckpoint discipline as supplier_pagerank).
+    # The sampled edge list is reused by FOUR degree rounds below, each
+    # joining back to the survivors: materialize it once.
     und = und.localCheckpoint(eager=True)
     d0 = und.groupBy("n").agg(F.count(F.lit(1)).alias("deg"))
     counts = d0.agg(
@@ -718,9 +698,9 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     # construction, so build and DEDUP only the canonical a.p < b.p half
     # (half the distinct-exchange bytes, half the checkpointed rows) and
     # reconstruct both directions map-side with one inline() at each
-    # consumer. e still feeds round 1 AND round 2 from one materialized
-    # build (the supplier_pagerank/hits localCheckpoint discipline; the
-    # spec is eager so the build is inside the timed region).
+    # consumer. e still feeds round 1 AND round 2 (which joins labels
+    # back onto it) from one materialized build; the spec is eager so the
+    # build is inside the timed region.
     # Interleaved A/B best-of-3 at sf0.1: 4.06 -> 2.69 s end-to-end.
     ec = (
         a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
@@ -764,7 +744,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     name="hits_hubs_authorities",
     survey="J6 A7 O4 W1",
-    eager=True,  # fn materializes the edge table; time it honestly
     doc="HITS (hubs & authorities), two unrolled iterations over the "
     "supplier->part bipartite posting graph (DISTINCT (s_suppkey, "
     "l_partkey) pairs from lineitem): a1(p) = sum of supplier degrees "
@@ -773,9 +752,10 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     "mutual-reinforcement recurrence stays ENTIRELY in BIGINT — no "
     "normalization, no floats, no cross-engine drift (the usual L2 "
     "normalization only matters for convergence-to-fixpoint, not for "
-    "the induced ranking). Each step is one equi-join + keyed "
-    "aggregation on the shuffled-once edge list — the same linear "
-    "shape as supplier_pagerank, but bipartite and exactly integer. "
+    "the induced ranking). Each half-step is a window sum over one "
+    "side's partition of the distinct edge rows, so there is no join "
+    "— the same window-pass shape as supplier_pagerank, but exactly "
+    "integer. "
     "Top-10 authorities with full (score desc, key) tiebreak.",
     oracle="""
         WITH edges AS (
@@ -801,21 +781,15 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "lineitem")
         .select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p"))
         .distinct()
-        .localCheckpoint(eager=True)  # scanned-once edge list, reused 3x
     )
-    deg = edges.groupBy("s").agg(F.count(F.lit(1)).cast("bigint").alias("h1"))
-    a1 = (
-        edges.join(deg, "s")
-        .groupBy("p")
-        .agg(F.sum("h1").cast("bigint").alias("a1"))
-    )
-    h2 = (
-        edges.join(a1, "p")
-        .groupBy("s")
-        .agg(F.sum("a1").cast("bigint").alias("h2"))
-    )
+    # Each half-step sums a neighbor score over one side's partition of
+    # the same edge rows, so the whole recurrence is three window passes
+    # and one final aggregate — no join-back to the edge list.
+    by_s, by_p = Window.partitionBy("s"), Window.partitionBy("p")
     a2 = (
-        edges.join(h2, "s")
+        edges.withColumn("h1", F.count(F.lit(1)).over(by_s))
+        .withColumn("a1", F.sum("h1").over(by_p))
+        .withColumn("h2", F.sum("a1").over(by_s))
         .groupBy("p")
         .agg(F.sum("h2").cast("bigint").alias("a2"))
     )
